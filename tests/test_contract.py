@@ -185,3 +185,66 @@ def test_localverify_artifact_covers_registry():
         f"{newest}: oracle-bearing keys recorded without a value-equality "
         f"pass: {weak[:10]}"
     )
+
+
+def test_scratch_policy_lives_in_io_only():
+    """Where written files go is one decision, made by io.scratch_dir:
+    no other engine module may reach for ``tempfile`` directly."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "xml_processor_spark"
+    offenders = [
+        f"{p.relative_to(root)}:{n}"
+        for p in sorted(root.rglob("*.py"))
+        if p.name != "io.py" or p.parent != root
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if "tempfile." in line
+    ]
+    assert not offenders, f"tempfile used outside io.py: {offenders}"
+
+
+def _tree_bytes(path) -> int:
+    import os
+
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(path)
+        for f in files
+    )
+
+
+def test_writing_keys_leave_one_copy_not_one_per_run(
+    spark, queries, tmp_path, monkeypatch
+):
+    """A key that writes files leaves its last run's output behind and
+    nothing more: three runs leave the same bytes as one."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for key in ("E-SINK-PQ", "E-XML-SRC", "E-SHARD-WRITE"):
+        queries[key](spark, SF_SMALL).collect()
+        once = _tree_bytes(tmp_path)
+        for _ in range(2):
+            queries[key](spark, SF_SMALL).collect()
+        assert _tree_bytes(tmp_path) == once, key
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "E-FILE-TRACK",
+        "E-FOREACH-BATCH",
+        "E-MULTIMODAL",
+        "q_pipeline_xml_etl",
+        "E-COMPACT-EXEC",
+    ],
+)
+def test_reused_scratch_dir_gives_same_rows_twice(spark, queries, key):
+    """A second run in the same session reuses the key's scratch dir; no
+    state from the first run may leak in (e.g. a second file-tracking
+    round re-ingesting the first round's files)."""
+
+    def rows():
+        return sorted(map(repr, queries[key](spark, SF_SMALL).collect()))
+
+    assert rows() == rows()

@@ -146,6 +146,11 @@ def test_compact_exec_one_file_per_bin(spark, queries):
     import glob
     import os
 
+    from xml_processor_spark.io import scratch_dir
+
+    # The executor writes to its scratch dir; asking for the path first
+    # (the call empties it) leaves the run below as the dir's contents.
+    newest = scratch_dir("E-COMPACT-EXEC", SF_SMALL)
     out = queries["E-COMPACT-EXEC"](spark, SF_SMALL)
     rows = out.collect()
     from xml_processor_spark.operators.lakeops import _COMPACT_BINS
@@ -161,8 +166,6 @@ def test_compact_exec_one_file_per_bin(spark, queries):
     # Physical layout: the executor writes to a deterministic
     # per-(process, sf_dir) path (ADVICE r9 — no mtime-glob races under
     # parallel workers, no per-invocation /tmp leak).
-    from xml_processor_spark.operators.lakeops import _compact_out_dir
-    newest = _compact_out_dir(SF_SMALL)
     assert os.path.isdir(newest), "no compacted output directory found"
     bin_dirs = glob.glob(os.path.join(newest, "target_file=*"))
     assert len(bin_dirs) == _COMPACT_BINS

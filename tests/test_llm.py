@@ -360,6 +360,24 @@ def test_dsir_weights_separate_target_language(spark, queries):
             assert m < 0, f"non-target {lang} weight {m:.3f} not negative"
 
 
+def test_dsir_memo_cap_does_not_change_weights(spark, queries, monkeypatch):
+    """The per-worker bigram→bucket memo is cleared at _DSIR_MEMO_CAP
+    entries. A clear inside a batch used to evict bigrams the batch's
+    map still needed (NaN → INT64_MIN → IndexError); with a cap far
+    below one batch's distinct bigrams, every batch clears, and the
+    weights must still equal the uncapped run's."""
+    from xml_processor_spark.functions import llm_pipeline
+
+    def run():
+        return sorted(
+            tuple(r) for r in queries["q_text_dsir"](spark, SF_MID).collect()
+        )
+
+    want = run()
+    monkeypatch.setattr(llm_pipeline, "_DSIR_MEMO_CAP", 8)
+    assert run() == want
+
+
 def test_incremental_dedup_consistent_with_full_pair_set(spark, queries):
     """The incremental batch-vs-index pass must be a pure RESTRICTION of
     the full corpus pair set: every emitted (new, partner) pair appears

@@ -885,11 +885,12 @@ def test_hive_partitioned_read_prunes_partitions(spark, queries):
     """A lang filter over the partitionBy(lang) tree must become a
     PartitionFilter — pruned at the file-listing level, so other
     partitions' data files are never opened."""
-    from xml_processor_spark.sources.roundtrip import artifact_dir
+    from xml_processor_spark.io import scratch_dir
 
-    # Run the operator once so the partitioned tree exists.
+    # Run the operator once so the partitioned tree exists (the path is
+    # asked for first: the call empties the dir the operator then fills).
+    path = scratch_dir("q_src_hive_partitioned", SF_MID)
     queries["q_src_hive_partitioned"](spark, SF_MID).count()
-    path = artifact_dir(SF_MID, "hivepart")
     import pyspark.sql.functions as F
 
     df = spark.read.parquet(path).filter(F.col("lang") == "en")

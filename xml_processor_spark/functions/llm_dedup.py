@@ -18,7 +18,7 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
-from xml_processor_spark.io import row_count, table, widen
+from xml_processor_spark.io import row_count, scratch_dir, table, widen
 from xml_processor_spark.registry import register
 
 
@@ -1047,8 +1047,8 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
         sh = sh.localCheckpoint(eager=True, storageLevel=_SH_CKPT_LEVEL)
         sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
         ranked = _rarity_ranked(sh).localCheckpoint(
-        eager=True, storageLevel=_SH_CKPT_LEVEL
-    )
+            eager=True, storageLevel=_SH_CKPT_LEVEL
+        )
         # k=2 prefix lemma, symmetric: J ≥ 4/5 ⟹ i ≥ ⌈0.8·max(na, nb)⌉
         # and (for max ≥ 2, i.e. any pair that is not singleton-singleton)
         # the two (n − ⌈0.8n⌉ + 2 = ⌊n/5⌋+2)-prefixes share TWO elements
@@ -1658,6 +1658,14 @@ def e_emb_lsh_hi(spark, sf_dir):
 _CC_MAX_ROUNDS = 20
 
 
+def _ensure_checkpoint_dir(spark):
+    """Reliable checkpoints need a checkpoint dir; set one (a scratch dir)
+    only if the session has none, so a caller-configured dir wins."""
+    sc = spark.sparkContext
+    if sc.getCheckpointDir() is None:
+        sc.setCheckpointDir(scratch_dir("checkpoint"))
+
+
 def _min_label_propagate(spark, pairs, max_rounds=_CC_MAX_ROUNDS):
     """Iterative min-label propagation over an undirected pair graph.
 
@@ -1671,11 +1679,7 @@ def _min_label_propagate(spark, pairs, max_rounds=_CC_MAX_ROUNDS):
     graphs are shallow; a deeper graph needs the alternating
     large-star/small-star variant (O(log n) rounds adversarially).
     """
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        import tempfile
-
-        sc.setCheckpointDir(tempfile.mkdtemp(prefix="xps-ckpt-"))
+    _ensure_checkpoint_dir(spark)
     edges = pairs.union(
         pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
     ).persist()  # reused every round; lineage kept → executor-loss safe
@@ -1730,11 +1734,7 @@ def _star_contract(spark, pairs, max_rounds=_CC_MAX_ROUNDS):
     phase is one groupBy + one re-join — the same per-round shuffle
     class, just fewer rounds. Reliable checkpoints per round (the
     q_dedup_cluster fault story)."""
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        import tempfile
-
-        sc.setCheckpointDir(tempfile.mkdtemp(prefix="xps-ckpt-"))
+    _ensure_checkpoint_dir(spark)
     edges = (
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -2074,8 +2074,8 @@ def q_dedup_containment(spark, sf_dir):
         sh = sh.localCheckpoint(eager=True, storageLevel=_SH_CKPT_LEVEL)
         sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
         ranked = _rarity_ranked(sh).localCheckpoint(
-        eager=True, storageLevel=_SH_CKPT_LEVEL
-    )
+            eager=True, storageLevel=_SH_CKPT_LEVEL
+        )
         # k=2 prefix lemma, directional: i ≥ ⌈0.9·na⌉ ≥ 2 ⟹ B contains
         # TWO of A's first ⌊na/10⌋+2 rarity-ordered shingles
         # (r ≤ ⌊na/10⌋+2 ⇔ 10·r ≤ na+20) — so block A's prefix-PAIRS

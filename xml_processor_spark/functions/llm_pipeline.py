@@ -16,7 +16,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from xml_processor_spark.functions.deterministic import py_half_away, r6
-from xml_processor_spark.io import table, widen
+from xml_processor_spark.io import scratch_dir, table, widen
 from xml_processor_spark.registry import register
 
 _CHUNK = 32  # tokens per chunk
@@ -517,9 +517,7 @@ def q_shard_assign(spark, sf_dir):
         "controlled by coalesce/AQE, never a global sort.",
 )
 def e_shard_write(spark, sf_dir):
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="shards_")
+    out = scratch_dir("E-SHARD-WRITE", sf_dir)
     d = table(spark, sf_dir, "documents").withColumn("shard", _shard_col())
     d.write.mode("overwrite").partitionBy("shard").parquet(out)
     back = spark.read.parquet(out)
@@ -903,6 +901,7 @@ def q_dedup_url_canon(spark, sf_dir):
 
 _DSIR_B = 128          # hashed bigram feature buckets
 _DSIR_TARGET = "en"    # the target distribution: English documents
+_DSIR_MEMO_CAP = 1 << 20  # per-worker bigram→bucket memo entries (~100 MB)
 
 _DSIR_BIGRAM_SQL = f"""
         big AS (
@@ -1002,10 +1001,11 @@ def q_text_dsir(spark, sf_dir):
 
     # Bounded per-worker memo (ADVICE r12): an uncapped dict grows
     # O(distinct bigrams) per worker — executor-OOM bait on a
-    # high-cardinality 100 TB corpus. Cleared wholesale at 2^20 entries
-    # (~100 MB worst-case); the md5 value is a pure function of the
-    # bigram, so cache state never affects results. Ships empty in the
-    # task closure; each worker process grows its own copy.
+    # high-cardinality 100 TB corpus. Cleared wholesale at
+    # _DSIR_MEMO_CAP entries, only between batches; the md5 value is a
+    # pure function of the bigram, so cache state never affects results.
+    # Ships empty in the task closure; each worker process grows its own
+    # copy.
     _bucket_memo: dict = {}
 
     def _batch_bigrams(pdf):
@@ -1044,19 +1044,25 @@ def q_text_dsir(spark, sf_dir):
 
     def _buckets_of(bigrams):
         """Bucket id per bigram instance: md5 once per DISTINCT bigram
-        (the bounded memo), dict-mapped in C over the instances."""
+        (the bounded memo), dict-mapped in C over the instances. The map
+        runs against this batch's own dict: the memo may be cleared
+        before a batch, never under one (a mid-batch clear evicted
+        bigrams the map still needed — NaN, then a garbage index)."""
         import numpy as np
 
         memo = _bucket_memo
+        if len(memo) >= _DSIR_MEMO_CAP:
+            memo.clear()
+        batch = {}
         for bg in bigrams.unique():
-            if bg not in memo:
-                if len(memo) >= (1 << 20):
-                    memo.clear()
-                memo[bg] = (
+            b = memo.get(bg)
+            if b is None:
+                b = memo[bg] = (
                     int(hashlib.md5(bg.encode("utf-8")).hexdigest()[:15], 16)
                     % _DSIR_B
                 )
-        return bigrams.map(memo).to_numpy(dtype=np.int64)
+            batch[bg] = b
+        return bigrams.map(batch).to_numpy(dtype=np.int64)
 
     def partials(it):
         import numpy as np

@@ -3,11 +3,15 @@
 Tables (FIXTURES.md): region nation customer supplier part orders lineitem
 events documents embeddings. Reads go through ``spark.read.parquet`` so
 predicate pushdown / column pruning / vectorized scanning apply untouched.
+Files an operator writes go to ``scratch_dir`` — the one scratch policy.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -137,3 +141,29 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     for name in TABLES:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
     spark._xps_views_sf_dir = sf_dir
+
+
+def scratch_dir(name: str, sf_dir: str | None = None) -> str:
+    """Empty scratch directory for an operator that writes files.
+
+    Every sink, roundtrip, streaming checkpoint and synthesized fixture
+    asks here. The directory is ``<gettempdir()>/xps-scratch-<pid>/<name>``,
+    suffixed with a hash of ``sf_dir`` when the caller has one; each call
+    removes it and re-creates it empty. So a key run N times leaves one
+    copy behind, two processes never share a directory, and nothing an
+    earlier run wrote can be read back as fresh.
+
+    Validity rule: a DataFrame backed by a scratch directory stays valid
+    until the same ``name`` runs again in the same process at the same
+    ``sf_dir`` — the next call empties the directory under it. Callers
+    whose files must outlive one call pick distinct names.
+    """
+    if sf_dir is not None:
+        tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
+        name = f"{name}-{tag}"
+    path = os.path.join(
+        tempfile.gettempdir(), f"xps-scratch-{os.getpid()}", name
+    )
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path

@@ -38,12 +38,11 @@ from __future__ import annotations
 
 import os
 import re
-import tempfile
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
-from xml_processor_spark.io import table
+from xml_processor_spark.io import scratch_dir, table
 from xml_processor_spark.registry import register
 
 _MACRO = re.compile(r"\$\{([^}]+)\}")
@@ -362,9 +361,7 @@ def _write_etl_fixture(spark, sf_dir: str) -> str:
         .groupBy("bucket")
         .agg(F.concat_ws("", F.sort_array(F.collect_list("x"))).alias("value"))
     )
-    out = os.path.join(
-        tempfile.gettempdir(), f"xps_pipeline_{os.getpid()}", "xml_in"
-    )
+    out = os.path.join(scratch_dir("q_pipeline_xml_etl", sf_dir), "xml_in")
     docs.select("value").write.mode("overwrite").text(out)
     return out
 

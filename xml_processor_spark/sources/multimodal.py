@@ -22,14 +22,13 @@ driver.
 from __future__ import annotations
 
 import os
-import tempfile
 from collections.abc import Iterator
 
 import pandas as pd
 
 from pyspark.sql import functions as F
 
-from xml_processor_spark.io import table, widen
+from xml_processor_spark.io import scratch_dir, table, widen
 from xml_processor_spark.registry import register
 
 _DECODE_SCHEMA = (
@@ -117,7 +116,7 @@ def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         "the Arrow decode stage read every fixture byte-exactly, once.",
 )
 def e_multimodal(spark, sf_dir):
-    tmp = tempfile.mkdtemp(prefix="multimodal_")
+    tmp = scratch_dir("E-MULTIMODAL", sf_dir)
     # Deterministic binary fixtures derived from the orders table. The
     # driver-side collect is fixture generation, capped STRUCTURALLY at
     # 4096 rows (distributed TakeOrdered on the key — O(1) driver memory

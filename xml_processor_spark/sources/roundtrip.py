@@ -10,28 +10,20 @@ simply projects the original parquet. Equal results ⇔ the
 write→parse→type-map path is lossless.
 
 Determinism: Java's shortest-representation double formatting roundtrips
-bit-exactly, dates serialize as ISO, and the artifact dir is keyed by the
-sf dir so repeated driver invocations overwrite the same location. At
+bit-exactly, dates serialize as ISO, and the files go to the key's
+``io.scratch_dir`` so repeated invocations reuse one location. At
 scale both writes and reads are scan-parallel (one file per partition, no
 shuffle).
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
-from xml_processor_spark.io import table
+from xml_processor_spark.io import scratch_dir, table
 from xml_processor_spark.registry import register
-
-
-def artifact_dir(sf_dir: str, name: str) -> str:
-    """Deterministic per-(sf, operator) scratch location outside the repo."""
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), "xps-artifacts", f"{name}-{tag}")
 
 
 _CSV_COLS = ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"]
@@ -52,7 +44,7 @@ _CSV_COLS = ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"]
 )
 def q_src_csv_roundtrip(spark, sf_dir):
     src = table(spark, sf_dir, "customer").select(*_CSV_COLS)
-    path = artifact_dir(sf_dir, "csv")
+    path = scratch_dir("q_src_csv_roundtrip", sf_dir)
     src.write.mode("overwrite").option("header", True).csv(path)
     return spark.read.schema(src.schema).option("header", True).csv(path)
 
@@ -74,7 +66,7 @@ _JSON_COLS = ["o_orderkey", "o_orderdate", "o_orderstatus", "o_totalprice"]
 )
 def q_src_json_roundtrip(spark, sf_dir):
     src = table(spark, sf_dir, "orders").select(*_JSON_COLS)
-    path = artifact_dir(sf_dir, "json")
+    path = scratch_dir("q_src_json_roundtrip", sf_dir)
     src.write.mode("overwrite").json(path)
     return spark.read.schema(src.schema).json(path)
 
@@ -101,7 +93,7 @@ _ORC_COLS = ["l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
 )
 def q_src_orc_roundtrip(spark, sf_dir):
     src = table(spark, sf_dir, "lineitem").select(*_ORC_COLS)
-    path = artifact_dir(sf_dir, "orc")
+    path = scratch_dir("q_src_orc_roundtrip", sf_dir)
     src.write.mode("overwrite").orc(path)
     return spark.read.orc(path)
 
@@ -148,7 +140,7 @@ def q_src_xml_dropmalformed(spark, sf_dir):
         F2.lit("</okey><status>X</status><total_c>0</total_c></order>"),
     )
     xml = F2.when(F2.col("o_orderkey") % 10 == 0, bad).otherwise(good)
-    path = artifact_dir(sf_dir, "xml-dm")
+    path = scratch_dir("q_src_xml_dropmalformed", sf_dir)
     # The native XML datasource requires each FILE to be a single rooted
     # document (multiple top-level row tags → "Illegal to have multiple
     # roots") — so records are grouped into 32 rooted documents, one line
@@ -200,7 +192,7 @@ def q_src_text_lines(spark, sf_dir):
             "value"
         )
     )
-    path = artifact_dir(sf_dir, "text")
+    path = scratch_dir("q_src_text_lines", sf_dir)
     src.write.mode("overwrite").text(path)
     lines = spark.read.text(path)
     tab = F.instr("value", "\t")
@@ -233,7 +225,7 @@ _HIVE_COLS = ["doc_id", "source", "n_chars", "lang"]
 )
 def q_src_hive_partitioned(spark, sf_dir):
     src = table(spark, sf_dir, "documents").select(*_HIVE_COLS)
-    path = artifact_dir(sf_dir, "hivepart")
+    path = scratch_dir("q_src_hive_partitioned", sf_dir)
     src.write.mode("overwrite").partitionBy("lang").parquet(path)
     out = spark.read.parquet(path)
     # Partition columns come back last and as read-inferred strings;
@@ -271,8 +263,6 @@ def q_src_hive_partitioned(spark, sf_dir):
         "(sign-aware), never float repr.",
 )
 def q_src_xml_encoding(spark, sf_dir):
-    import shutil
-
     # Fixture collect capped STRUCTURALLY at 4096 rows (distributed
     # TakeOrdered — O(1) driver memory at any SF; |customer|/100 stays
     # under the cap at every test SF, and the oracle applies the same
@@ -289,9 +279,7 @@ def q_src_xml_encoding(spark, sf_dir):
         .limit(4096)
         .collect()
     )
-    path = artifact_dir(sf_dir, "xml-latin1")
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
+    path = scratch_dir("q_src_xml_encoding", sf_dir)
     buckets: dict[int, list] = {}
     for r in rows:
         buckets.setdefault(r.c_custkey % 4, []).append(r)

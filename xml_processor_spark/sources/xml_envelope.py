@@ -22,12 +22,9 @@ two-decimal strings built from integer cents.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
-from xml_processor_spark.io import table, widen
+from xml_processor_spark.io import scratch_dir, table, widen
 from xml_processor_spark.registry import register
 
 # Exact 2-dp decimal string from a 2-dp double (cross-engine-identical):
@@ -161,7 +158,7 @@ def q_xml_nested_explode(spark, sf_dir):
     # widen() before the groupBy: the partial collect_list (and the per-line
     # XML string build) otherwise runs on the single scan task of the
     # one-row-group local fixture. Measured 1.56s -> 1.34s fresh-process at
-    # sf0.1 (tools/exp_nested.py); no-op on an already-wide scan.
+    # sf0.1; no-op on an already-wide scan.
     li = widen(table(spark, sf_dir, "lineitem"))
     line_xml = F.concat(
         F.lit("<line><ln>"), F.col("l_linenumber").cast("string"),
@@ -320,8 +317,7 @@ def q_json_typed(spark, sf_dir):
 )
 def e_xml_src(spark, sf_dir):
     o = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 < 2)
-    tmp = tempfile.mkdtemp(prefix="xmlsrc_")
-    xml_dir = os.path.join(tmp, "xml")
+    xml_dir = scratch_dir("E-XML-SRC", sf_dir)
     # One well-formed document per bucket (the XML datasource scans for
     # rowTag occurrences inside a rooted document, as the Hadoop
     # XmlInputFormat underlying XMLReader does [P]).
@@ -373,7 +369,7 @@ def e_sink_pq(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag"
     )
-    tmp = os.path.join(tempfile.mkdtemp(prefix="sinkpq_"), "out")
+    tmp = scratch_dir("E-SINK-PQ", sf_dir)
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(tmp)
     back = spark.read.parquet(tmp)
     return back.groupBy("l_returnflag").agg(F.count(F.lit(1)).alias("cnt"))

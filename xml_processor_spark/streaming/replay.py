@@ -11,10 +11,11 @@ state at end of replay.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from xml_processor_spark.io import scratch_dir
 
 EVENT_SCHEMA = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"
 
@@ -30,8 +31,12 @@ def write_replay_files(
     ``late_rows`` (if given) are appended as the LAST file even though their
     timestamps are early — the late-arrival fixture. ``sentinel`` appends a
     final watermark-flush row 1 day after max ts.
+
+    Every call reuses one ``io.scratch_dir("replay")``, which the next call
+    empties: each caller drains its stream (``availableNow`` +
+    ``awaitTermination``) before the next replay is written.
     """
-    src = tempfile.mkdtemp(prefix="replay_")
+    src = scratch_dir("replay")
     df = df.select("event_id", "ts", "user_id", "event_type", "value")
     bounds = df.agg(
         F.min("ts").alias("lo"), F.max("ts").alias("hi")

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from xml_processor_spark.io import table
+from xml_processor_spark.io import scratch_dir, table
 from xml_processor_spark.registry import register
 from xml_processor_spark.streaming.replay import (
     read_replay_stream,
@@ -316,12 +316,10 @@ def epoch_keyed_sink(out_dir: str):
         "sink total equals the batch source.",
 )
 def e_foreach_batch(spark, sf_dir):
-    import tempfile
-
     ev = table(spark, sf_dir, "events").filter(F.col("user_id") < 30)
     src = write_replay_files(ev, n_buckets=4)
-    out_dir = tempfile.mkdtemp(prefix="fb_sink_")
-    ckpt = tempfile.mkdtemp(prefix="fb_ckpt_")
+    out_dir = scratch_dir("E-FOREACH-BATCH-sink", sf_dir)
+    ckpt = scratch_dir("E-FOREACH-BATCH-ckpt", sf_dir)
     sink = epoch_keyed_sink(out_dir)
 
     q = (
