@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_MID, SF_SMALL
@@ -627,3 +628,112 @@ def test_prefix_pair_block_routes_cover_hostile_shapes(spark, tmp_path):
     finally:
         LD._PAIR_BLOCK_MIN_DOCS = saved
         LD._RECOUNT_SEMI_MIN_DOCS = saved_semi
+
+
+# Degenerate corpora for the posting route: doc_id -> text (None = null).
+_DEGENERATE_CORPORA = {
+    # The null id carries a copy of a real document's text: dropped before
+    # the posting entries are built it pairs with nothing (the all-shingle
+    # truth never pairs a null id); packed, it would trip the entry guard.
+    # The negative ids pin the arithmetic-shift unpack.
+    "null_doc_id": {
+        None: "a b c d e f g h",
+        0: "a b c d e f g h",
+        5: "a b c d e f g x",
+        -5: "a b c d e f g h",
+        -3: "p q r s t",
+        7: "p q r s t u",
+    },
+    "null_text": {0: None, 5: "a b c d e", 7: "a b c d e", 10: None},
+    "short_text": {0: "a b", 5: "a", 6: "", 10: "a b c", 15: "a b c"},
+    "single_doc": {5: "a b c d e f"},
+    "empty": {},
+}
+
+
+@pytest.mark.parametrize("corpus", sorted(_DEGENERATE_CORPORA))
+def test_posting_route_degenerate_inputs(spark, tmp_path, corpus):
+    """The three posting-route keys (ngram Jaccard, containment,
+    incremental) on degenerate corpora — a null doc_id, null text, texts
+    shorter than a shingle, one document, no documents — must equal
+    brute-force Python shingle sets. Only pairs sharing a shingle exist
+    (the all-shingle join's semantics), so two shingle-less documents
+    never pair."""
+    import itertools
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from xml_processor_spark.functions.llm_dedup import (
+        q_dedup_containment,
+        q_dedup_incremental,
+        q_dedup_ngram_jaccard,
+    )
+
+    texts = _DEGENERATE_CORPORA[corpus]
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(list(texts), type=pa.int64()),
+            "text": pa.array(list(texts.values()), type=pa.string()),
+        }),
+        str(tmp_path / "documents.parquet"),
+    )
+
+    def sh(t):
+        toks = [] if t is None else t.split(" ")
+        return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+
+    sets = {i: sh(t) for i, t in texts.items() if i is not None}
+    exp_jac, exp_cont, exp_inc = {}, {}, {}
+    for a, b in itertools.permutations(sets, 2):
+        i = len(sets[a] & sets[b])
+        if i == 0:
+            continue
+        u = len(sets[a]) + len(sets[b]) - i
+        if a < b and 10 * i >= 8 * u:
+            exp_jac[(a, b)] = round(i / u, 6)
+        if 10 * i >= 9 * len(sets[a]):
+            exp_cont[(a, b)] = round(i / len(sets[a]), 6)
+        # a = new-batch doc (id % 5 == 0), b = partner; sign-free tests.
+        if a % 5 == 0 and (b % 5 != 0 or b < a) and 10 * i >= 8 * u:
+            exp_inc[(a, b)] = (round(i / u, 6), b % 5 == 0)
+
+    if corpus == "null_doc_id":
+        assert (-5, 0) in exp_jac and (0, -5) in exp_inc  # negative ids pair
+        assert (-3, 7) in exp_cont
+
+    sf = str(tmp_path)
+    got_jac = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in q_dedup_ngram_jaccard(spark, sf).collect()
+    }
+    got_cont = {
+        (r["id_a"], r["id_b"]): r["containment"]
+        for r in q_dedup_containment(spark, sf).collect()
+    }
+    got_inc = {
+        (r["doc_id"], r["partner_id"]): (r["jaccard"], r["partner_is_new"])
+        for r in q_dedup_incremental(spark, sf).collect()
+    }
+    assert got_jac == exp_jac
+    assert got_cont == exp_cont
+    assert got_inc == exp_inc
+
+
+def test_posting_entry_overflow_raises(spark, tmp_path):
+    """A doc_id outside the packed posting entry's range must fail the
+    query, never alias another document's entry."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from xml_processor_spark.functions.llm_dedup import q_dedup_ngram_jaccard
+
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array([1, 1 << 43], type=pa.int64()),
+            "text": pa.array(["a b c d", "a b c d"]),
+        }),
+        str(tmp_path / "documents.parquet"),
+    )
+    with pytest.raises(Exception, match="posting entry overflow"):
+        q_dedup_ngram_jaccard(spark, str(tmp_path)).collect()

@@ -78,8 +78,10 @@ def test_minhash_band_join_is_equi(spark, queries):
 
 
 def test_ngram_jaccard_blocked_join_is_equi(spark, queries):
-    """Shingle-blocked candidate pairs join on the shingle (equi), never
-    all-pairs; only the tiny size lookups broadcast."""
+    """Shingle-blocked candidate pairs come from per-shingle posting lists
+    (each pair's count is keyed on the shingle it shares), never from an
+    all-pairs operator; the size-carrying entries leave no size lookup
+    to join."""
     plan = explain(queries["q_dedup_ngram_jaccard"](spark, SF_MID))
     assert "CartesianProduct" not in plan
 
@@ -1821,18 +1823,71 @@ def test_unimax_windows_stay_on_domain_table(spark, queries):
 
 
 def test_dedup_incremental_blocks_on_token_key(spark, queries):
-    """Incremental dedup, posting route (r16 posting-LIST form): the
-    candidate pairs come from ONE groupBy(shingle) + per-list combo
-    explode (a Generate node) with the new-batch restriction pushed into
-    the combo lambda — no doc-level cross join, no candidate self-join
-    at all; the only joins left are the two per-doc size lookups."""
+    """Incremental dedup, posting route: the candidate pairs come from ONE
+    groupBy(shingle) + per-list combo explode (a Generate node) with the
+    new-batch restriction pushed into the combo lambda — no doc-level
+    cross join, no candidate self-join; every posting entry carries its
+    doc's shingle count, so no size lookup is joined back either."""
     plan = explain(queries["q_dedup_incremental"](spark, SF_MID))
     n = node_counts(plan)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Generate" in plan  # the posting-list combo explode
-    assert n["SortMergeJoin"] + n["ShuffledHashJoin"] + n["BroadcastHashJoin"] == 2
+    assert n["SortMergeJoin"] + n["ShuffledHashJoin"] + n["BroadcastHashJoin"] == 0
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def _node_details(plan: str) -> dict[int, str]:
+    """Formatted-plan detail section of every node, by node id."""
+    import re
+
+    parts = re.split(r"^\((\d+)\) ", plan, flags=re.M)
+    return {int(i): body for i, body in zip(parts[1::2], parts[2::2])}
+
+
+def _subtree_ids(plan: str, node_id: int) -> set[int]:
+    """Ids of the nodes below ``node_id`` in the formatted plan's tree."""
+    import re
+
+    tree = plan.split("\n\n\n", 1)[0].splitlines()
+    rows = []
+    for line in tree:
+        m = re.search(r"([A-Za-z]\S*).*\((\d+)\)\s*$", line)
+        if m:
+            rows.append((m.start(1), int(m.group(2))))
+    at = next(k for k, (_, i) in enumerate(rows) if i == node_id)
+    below = set()
+    for col, i in rows[at + 1 :]:
+        if col <= rows[at][0]:
+            break
+        below.add(i)
+    return below
+
+
+def test_posting_route_one_scan_no_join_shingles_above_widen(spark, queries):
+    """Posting route (below the pair-block cutover): one documents scan,
+    shingles built once, each posting entry carrying its doc's shingle
+    count — so no size aggregate is joined back and the plan has no join
+    at all. The shingle expression (concat_ws over split(text)) must run
+    above widen()'s round-robin exchange: a filter on the shingle array
+    pushed below it would re-run that expression on the single scan
+    partition."""
+    for key in (
+        "q_dedup_ngram_jaccard", "q_dedup_containment", "q_dedup_incremental",
+    ):
+        plan = explain(queries[key](spark, SF_MID))
+        n = node_counts(plan)
+        assert sum(c for name, c in n.items() if name.endswith("Join")) == 0, key
+        assert n["Scan"] == 1 and "documents.parquet" in plan, key
+        details = _node_details(plan)
+        widen_ids = [
+            i for i, body in details.items()
+            if "RoundRobinPartitioning" in body
+        ]
+        assert widen_ids, key
+        for x in widen_ids:
+            for i in _subtree_ids(plan, x):
+                assert "concat_ws" not in details[i], (key, i)
 
 
 def test_hard_negatives_bounded_probe_loop(spark, queries):

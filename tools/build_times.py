@@ -6,11 +6,12 @@ every intermediate Dataset, plus any build-time materialization the
 operator does on purpose (the pair-graph keys eagerly localCheckpoint
 their shared pair list) — WITHOUT running the final action. This is the
 driver-side floor a query pays before its first job starts; the r15
-sweep (`BUILD_TIMES_r15.json`) measured 26.5 s of the 90.2 s clean
-sf0.1 bench here, motivating the JVM-parsed-SQL emission work.
+sweep measured 26.5 s of the 90.2 s clean sf0.1 bench here, motivating
+the JVM-parsed-SQL emission work (`BUILD_TIMES_r16.json` holds the
+latest sweep).
 
 Usage:
-    python tools/build_times.py [--out BUILD_TIMES_r15.json] [key ...]
+    python tools/build_times.py [--out BUILD_TIMES_r16.json] [key ...]
 
 Estimator: 1 warmup call (parser/analyzer JIT, file listing) + min of 2,
 matching the bench's min-estimator rationale on this 40%-variance host.

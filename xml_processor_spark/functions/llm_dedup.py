@@ -313,7 +313,19 @@ def q_dedup_near_jaccard(spark, sf_dir):
 )
 def q_dedup_incremental(spark, sf_dir):
     d = widen(table(spark, sf_dir, "documents"))
-    sh = d.select("doc_id", F.explode(shingles("text")).alias("s"))
+    if row_count(sf_dir, "documents") < _PAIR_BLOCK_MIN_DOCS:
+        # Small corpus: size-carrying posting lists with the NEW batch on
+        # one side (cutover rationale at _PAIR_BLOCK_MIN_DOCS). The
+        # new-batch restriction and the orientation filter sit in the
+        # per-shingle combo lambda (packed entries compare in doc_id
+        # order), so exactly the pairs the all-shingle join keeps are
+        # ever emitted.
+        pairs = _posting_pairs(
+            d,
+            keep=f"shiftright(p.a, {_PK_BITS}) % 5 = 0 AND "
+                 f"(shiftright(p.b, {_PK_BITS}) % 5 <> 0 OR p.b < p.a)",
+        )
+        return _inc_threshold(pairs.toDF("id_n", "nn", "id_p", "np", "i"))
     # r15 k=2 rarity-prefix-pair block (see q_dedup_ngram_jaccard — same
     # J ≥ 0.8 lemma, both sides block on unordered PAIRS of their
     # ⌊n/5⌋+2 rarest shingles; singleton docs via the k=1 route): the
@@ -324,39 +336,13 @@ def q_dedup_incremental(spark, sf_dir):
         (F.col("id_p") != F.col("id_n"))
         & ((F.col("id_p") % 5 != 0) | (F.col("id_p") < F.col("id_n")))
     )
-    if row_count(sf_dir, "documents") < _PAIR_BLOCK_MIN_DOCS:
-        # Small corpus: posting block with the NEW batch on one side
-        # (cutover rationale at _PAIR_BLOCK_MIN_DOCS). r16: posting-LIST
-        # form (see _posting_intersections) — one groupBy(s) instead of
-        # the two-sided self-join, with the new-batch restriction and
-        # the orientation filter pushed into the per-shingle combo
-        # lambda, so exactly the rows the old join+filter kept are ever
-        # emitted.
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-        arr = sh.groupBy("s").agg(
-            F.sort_array(F.collect_list("doc_id")).alias("ds")
-        )
-        combos = F.expr(
-            "flatten(transform(sequence(0, size(ds) - 1), i -> "
-            "filter(transform(sequence(0, size(ds) - 1), j -> "
-            "struct(element_at(ds, i + 1) AS n, "
-            "element_at(ds, j + 1) AS p)), c -> "
-            "c.n % 5 = 0 AND c.p <> c.n "
-            "AND (c.p % 5 <> 0 OR c.p < c.n))))"
-        )
-        inter = (
-            arr.filter(F.size("ds") >= 2)
-            .select(F.explode(combos).alias("c"))
-            .groupBy(
-                F.col("c.n").alias("id_n"), F.col("c.p").alias("id_p")
-            )
-            .agg(F.count(F.lit(1)).alias("i"))
-        )
-        return _inc_threshold(inter, sizes)
+    sh = d.select("doc_id", F.explode(shingles("text")).alias("s"))
     # One materialization each for the shingle explode and the rarity
     # ranking (guide §2.4/§5.4 — see q_dedup_ngram_jaccard).
     sh = sh.localCheckpoint(eager=True, storageLevel=_SH_CKPT_LEVEL)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sn = sizes.select(F.col("doc_id").alias("id_n"), F.col("n").alias("nn"))
+    sp = sizes.select(F.col("doc_id").alias("id_p"), F.col("n").alias("np"))
     ranked = _rarity_ranked(sh).localCheckpoint(
         eager=True, storageLevel=_SH_CKPT_LEVEL
     )
@@ -378,14 +364,8 @@ def q_dedup_incremental(spark, sf_dir):
     cand = (
         cand2.unionByName(cand1)
         .distinct()
-        .join(
-            sizes.select(F.col("doc_id").alias("id_n"), F.col("n").alias("nn")),
-            "id_n",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("id_p"), F.col("n").alias("np")),
-            "id_p",
-        )
+        .join(sn, "id_n")
+        .join(sp, "id_p")
         .filter(
             (10 * F.col("nn") >= 8 * F.col("np"))
             & (10 * F.col("np") >= 8 * F.col("nn"))
@@ -396,27 +376,20 @@ def q_dedup_incremental(spark, sf_dir):
         sh, cand, left_id="id_n", right_id="id_p",
         n_docs=row_count(sf_dir, "documents"),
     )
-    return _inc_threshold(inter, sizes)
+    return _inc_threshold(inter.join(sn, "id_n").join(sp, "id_p"))
 
 
-def _inc_threshold(inter, sizes):
+def _inc_threshold(pairs):
     """Shared exact-Jaccard threshold + output projection for both
-    q_dedup_incremental candidate routes (posting / prefix-pair)."""
-    sn = sizes.select(F.col("doc_id").alias("id_n"), F.col("n").alias("nn"))
-    sp = sizes.select(F.col("doc_id").alias("id_p"), F.col("n").alias("np"))
-    union_sz = F.col("nn") + F.col("np") - F.col("i")
-    return (
-        inter.join(sn, "id_n")
-        .join(sp, "id_p")
-        .filter(_NG_DEN * F.col("i") >= _NG_NUM * union_sz)
-        .select(
-            F.col("id_n").alias("doc_id"),
-            F.col("id_p").alias("partner_id"),
-            F.round(F.col("i") / union_sz.cast("double"), 6).alias(
-                "jaccard"
-            ),
-            (F.col("id_p") % 5 == 0).alias("partner_is_new"),
-        )
+    q_dedup_incremental candidate routes (posting / prefix-pair), over
+    (id_n, nn, id_p, np, i) rows."""
+    return pairs.filter(
+        f"{_NG_DEN} * i >= {_NG_NUM} * (nn + np - i)"
+    ).selectExpr(
+        "id_n AS doc_id",
+        "id_p AS partner_id",
+        "round(i / CAST(nn + np - i AS DOUBLE), 6) AS jaccard",
+        "id_p % 5 = 0 AS partner_is_new",
     )
 
 
@@ -436,27 +409,32 @@ def shingles(text_col):
     vocabulary. This is the standard MinHash formulation for text.
     """
     # Docs shorter than the shingle width yield NO shingles (empty array).
-    # The CASE guard matters under ANSI mode (Spark 4 default):
-    # element_at past the array end throws INVALID_ARRAY_INDEX, and
-    # sequence(1, 0) counts DOWN to [1, 0] — so the bound must stay >= 1
-    # and the empty case must be picked before the transform evaluates.
-    # Oracles mirror this with generate_series(1, len - k + 1), which is
-    # empty in DuckDB when the bound is < 1.
+    # The CASE guard matters under ANSI mode (Spark 4 default): slice
+    # rejects a negative length, so the empty case must be picked before
+    # the slices evaluate. Oracles mirror this with
+    # generate_series(1, len - k + 1), which is empty in DuckDB when the
+    # bound is < 1.
+    # The k words of each shingle come from k aligned slices of the token
+    # array zipped together, so a row's text is split a fixed number of
+    # times. A transform() lambda indexing split(text) re-splits the whole
+    # text for every shingle, quadratic in document length: on 19k docs of
+    # ~55 tokens (4-core host) that built the same arrays in 4.5 s against
+    # 1.0 s.
     # Built as ONE JVM-parsed SQL string (guide §5 driver overhead): the
-    # Column-API formulation with a Python transform() lambda cost ~200
-    # py4j round-trips per call site, and this helper fronts every
-    # shingle-family key (~12 bench keys pay it). `text_col` is the
-    # column NAME; the expression tree is byte-for-byte the old one
-    # (i + 0 / - _SHINGLE_K + 1 shapes preserved).
+    # Column-API formulation with Python lambdas cost ~200 py4j
+    # round-trips per call site, and this helper fronts every
+    # shingle-family key. `text_col` is the column NAME.
     toks = f"split({text_col}, ' ')"
-    grams = ", ".join(
-        f"element_at({toks}, i + {off})" for off in range(_SHINGLE_K)
-    )
+    n = f"size({toks}) - {_SHINGLE_K - 1}"
+    grams = f"slice({toks}, 1, {n})"
+    for off in range(1, _SHINGLE_K):
+        grams = (
+            f"zip_with({grams}, slice({toks}, {off + 1}, {n}),"
+            " (g, t) -> concat_ws(' ', g, t))"
+        )
     return F.expr(
-        f"CASE WHEN size({toks}) >= {_SHINGLE_K} THEN array_distinct("
-        f"transform(sequence(1, size({toks}) - {_SHINGLE_K} + 1),"
-        f" i -> concat_ws(' ', {grams})))"
-        f" ELSE CAST(array() AS ARRAY<STRING>) END"
+        f"CASE WHEN size({toks}) >= {_SHINGLE_K} THEN array_distinct({grams})"
+        " ELSE CAST(array() AS ARRAY<STRING>) END"
     )
 
 
@@ -608,21 +586,23 @@ def _prefix_pairs_exact(sh, cand, left_id="id_a", right_id="id_b",
 
 # Cost-based candidate-route cutover (r15). Two exact, hash-identical
 # candidate generators exist for the shingle-Jaccard family:
-#   posting block — join the shingle posting lists directly; ONE shuffle,
-#     no prelude, but the candidate volume is Σ_s df(s)², which
-#     SCALING.json measured growing quadratically on the frequency head
-#     (containment exp 2.18, 430 s at SF3 on the decimate corpus);
+#   posting block (_posting_pairs) — one scan and one shingle explode into
+#     size-carrying posting lists, one groupBy(s), the pair explode and
+#     one pair count; no prelude and no join, but the candidate volume is
+#     Σ_s df(s)², which SCALING.json measured growing quadratically on the
+#     frequency head (containment exp 2.18, 430 s at SF3 on the decimate
+#     corpus);
 #   rarity-prefix-PAIR block (_rarity_ranked/_pair_combos) — near-linear
 #     by the generalized prefix lemma, but its df-aggregate + rank-window
 #     + combo-explode prelude adds ~4 linear stages that DOMINATE a small
 #     corpus (sf0.1, 5k docs: ngram 1.13 s posting vs 3.41 s pair in the
 #     r15 committed bench pair).
 # SCALING.json's measured crossover sits near SF1 (50k docs: posting
-# 21.05 s vs pair 20.19 s), so the operators pick the route from a
-# one-job count of the pruned documents scan: posting below
-# _PAIR_BLOCK_MIN_DOCS, prefix-pair at or above it — the same
-# cardinality-driven physical-plan choice a cost-based optimizer makes,
-# with both routes' output equality pinned by the route test in
+# 21.05 s vs pair 20.19 s), so the operators pick the route from the
+# documents row count in the parquet footers (io.row_count, no job):
+# posting below _PAIR_BLOCK_MIN_DOCS, prefix-pair at or above it — the
+# same cardinality-driven physical-plan choice a cost-based optimizer
+# makes, with both routes' output equality pinned by the route test in
 # tests/test_llm.py and by the fixture sweeps (sf0.01 exercises posting,
 # SF1/SF3 exercise prefix-pair).
 _PAIR_BLOCK_MIN_DOCS = 20_000
@@ -641,52 +621,87 @@ from pyspark import StorageLevel as _SL  # noqa: E402
 _SH_CKPT_LEVEL = _SL.DISK_ONLY
 
 
-def _posting_intersections(sh, left_id, right_id, *, symmetric):
-    """Exact |A∩B| for every co-shingled doc pair via per-shingle posting
-    LISTS — the small-corpus candidate route (see _PAIR_BLOCK_MIN_DOCS).
-    ``symmetric=True`` keeps each unordered pair once (id_a < id_b);
-    ``False`` keeps both orientations for directional scores.
+# Posting entry of the small-corpus route: ONE bigint per (shingle, doc)
+# carrying the doc's id and its distinct-shingle count n, packed as
+# (doc_id << 20) + n. The arithmetic shift unpacks negative ids exactly,
+# and the packed value sorts (and compares) in doc_id order, so the
+# sorted posting list is also the doc_id-sorted list. Out-of-range
+# entries raise rather than alias: n < 2^20 and |doc_id| < 2^43 keep the
+# shifted id inside a signed 64-bit value.
+_PK_BITS = 20
+_PK_MASK = (1 << _PK_BITS) - 1
+_PK_ID_LIM = 1 << (63 - _PK_BITS)
+_PK_ENTRY_SQL = (
+    f"CASE WHEN size(ss) <= {_PK_MASK} AND doc_id > -{_PK_ID_LIM}"
+    f" AND doc_id < {_PK_ID_LIM}"
+    f" THEN shiftleft(doc_id, {_PK_BITS}) + size(ss)"
+    " ELSE raise_error('posting entry overflow: a document needs fewer"
+    f" than 2^{_PK_BITS} shingles and |doc_id| < 2^{63 - _PK_BITS}') END AS k"
+)
+_PK_UNPACK_SQL = (
+    f"shiftright(a, {_PK_BITS}) AS id_a", f"a & {_PK_MASK} AS na",
+    f"shiftright(b, {_PK_BITS}) AS id_b", f"b & {_PK_MASK} AS nb", "i",
+)
 
-    r16 (guide §2.4): formerly a posting self-JOIN — shuffle sh by s
-    TWICE (both join sides), equi-join, then shuffle the joined stream a
-    third time for the pair groupBy, and each join side re-ran the
-    shingle explode upstream. The posting-list form groups by s ONCE
-    (one shuffle, one explode), collects the sorted per-shingle doc
-    list, and emits the ordered 2-subsets with a nested transform (the
-    _pair_combos shape) straight into the pair aggregate: identical
-    (pair, count-of-shared-shingles) output — per shingle the emitted
-    pairs ARE the join's matches — with one Exchange and zero joins
-    removed. Per-shingle list size is document frequency, bounded here
-    by construction: this route only runs below _PAIR_BLOCK_MIN_DOCS
-    docs (the prefix-pair route owns volume)."""
-    arr = sh.groupBy("s").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("ds")
-    )
-    if symmetric:
-        combos = F.expr(
-            "flatten(transform(sequence(0, size(ds) - 2), i -> "
-            "transform(sequence(i + 1, size(ds) - 1), j -> "
-            "struct(element_at(ds, i + 1) AS a, "
-            "element_at(ds, j + 1) AS b))))"
+
+def _posting_pairs(d, keep=None):
+    """Exact |A∩B| for every co-shingled doc pair via per-shingle posting
+    lists — the small-corpus candidate route (see _PAIR_BLOCK_MIN_DOCS).
+    ``d`` is the widened documents table; returns (id_a, na, id_b, nb, i)
+    with na/nb the two docs' distinct-shingle counts, so every threshold
+    and score of the family is a projection — no size table, no join.
+
+    ``keep=None`` emits each unordered pair once (id_a < id_b). Otherwise
+    every ordered pair of distinct docs whose packed entries ``a``/``b``
+    satisfy the SQL predicate ``keep`` (written over ``p.a``/``p.b``) is
+    emitted — ``"true"`` for both orientations of directional scores.
+
+    One scan, one shingle projection and one explode (REPOSE, ICDE'21: a
+    partitioned index that carries everything the similarity test needs
+    serves the query, with nothing joined back): n = size(ss) is the
+    doc's distinct-shingle count because shingles() is array_distinct;
+    the row explodes once with the packed (doc_id, n) entry in every
+    posting, groupBy(s) sorts each list, and the ordered 2-subsets of
+    the list go straight into the pair count. Per-shingle list size is
+    document frequency, bounded by construction: this route only runs
+    below _PAIR_BLOCK_MIN_DOCS docs (the prefix-pair route owns volume).
+
+    Plan shape matters twice over. Null ids are dropped BEFORE packing (a
+    null id would otherwise trip the overflow guard; the all-shingle
+    truth never pairs a null id). And the shingle array is exploded with
+    explode_outer + ``s IS NOT NULL``: a plain explode of the projected
+    array attribute lets InferFiltersFromGenerate derive a
+    ``size(shingles(text)) > 0`` filter and push it below the widen()
+    exchange, re-running the shingle expression on the single scan
+    partition (4-core host, 1k docs: 0.8 s against 0.6 s warm wall)."""
+    if keep is None:
+        combos = (
+            "flatten(transform(sequence(0, size(ks) - 2), i -> "
+            "transform(sequence(i + 1, size(ks) - 1), j -> "
+            "struct(element_at(ks, i + 1) AS a, "
+            "element_at(ks, j + 1) AS b))))"
         )
     else:
-        # Both orientations of each distinct pair; equal ids (duplicate
-        # doc_id rows cannot occur: sh carries distinct shingles per doc)
-        # are excluded by construction since i <> j over the sorted list
-        # of distinct ids.
-        combos = F.expr(
-            "flatten(transform(sequence(0, size(ds) - 1), i -> "
-            "filter(transform(sequence(0, size(ds) - 1), j -> "
-            "struct(element_at(ds, i + 1) AS a, "
-            "element_at(ds, j + 1) AS b)), p -> p.a <> p.b)))"
+        combos = (
+            "flatten(transform(sequence(0, size(ks) - 1), i -> "
+            "filter(transform(sequence(0, size(ks) - 1), j -> "
+            "struct(element_at(ks, i + 1) AS a, "
+            "element_at(ks, j + 1) AS b)), "
+            f"p -> p.a <> p.b AND ({keep}))))"
         )
     return (
-        arr.filter(F.size("ds") >= 2)
-        .select(F.explode(combos).alias("p"))
-        .groupBy(
-            F.col("p.a").alias(left_id), F.col("p.b").alias(right_id)
-        )
-        .agg(F.count(F.lit(1)).alias("i"))
+        d.filter("doc_id IS NOT NULL")
+        .select("doc_id", shingles("text").alias("ss"))
+        .selectExpr(_PK_ENTRY_SQL, "ss")
+        .selectExpr("k", "explode_outer(ss) AS s")
+        .filter("s IS NOT NULL")
+        .groupBy("s")
+        .agg(F.expr("sort_array(collect_list(k)) AS ks"))
+        .filter("size(ks) >= 2")
+        .selectExpr(f"inline({combos})")
+        .groupBy("a", "b")
+        .agg(F.expr("count(1) AS i"))
+        .selectExpr(*_PK_UNPACK_SQL)
     )
 
 
@@ -1024,17 +1039,18 @@ _NGRAM_PAIRS_SQL = f"""
         "oracle keeps it).",
 )
 def q_dedup_ngram_jaccard(spark, sf_dir):
-    # widen(): shingle building is CPU-heavy per row; the candidate join
-    # below re-shuffles on the shingle anyway, so this only parallelizes
-    # the map side.
+    # widen(): shingle building is CPU-heavy per row and the scan yields
+    # one partition; both routes re-shuffle on the shingle right after
+    # it, so this only parallelizes the map side (4-core host, 19k docs,
+    # posting route: 10.8-11.5 s warm wall with it, 13.1-13.6 s without).
     d = widen(table(spark, sf_dir, "documents"))
-    sh = d.select("doc_id", F.explode(shingles("text")).alias("s"))
     if row_count(sf_dir, "documents") < _PAIR_BLOCK_MIN_DOCS:
-        # Small corpus: the posting block's one shuffle beats the pair
-        # machinery's prelude (cutover rationale at _PAIR_BLOCK_MIN_DOCS).
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-        inter = _posting_intersections(sh, "id_a", "id_b", symmetric=True)
+        # Small corpus: the size-carrying posting lists' one scan and
+        # two shuffles beat the pair machinery's prelude (cutover
+        # rationale at _PAIR_BLOCK_MIN_DOCS).
+        pairs = _posting_pairs(d)
     else:
+        sh = d.select("doc_id", F.explode(shingles("text")).alias("s"))
         # Materialize the shingle explode and the rarity ranking exactly
         # ONCE per invocation (guide §2.4/§5.4 — the _ngram_pairs_pinned
         # rationale one level down): lazily, `sh` feeds FIVE non-aligned
@@ -1046,6 +1062,12 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
         # Same pattern as the pagerank/pair-list pins; output unchanged.
         sh = sh.localCheckpoint(eager=True, storageLevel=_SH_CKPT_LEVEL)
         sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+        sa = sizes.select(
+            F.col("doc_id").alias("id_a"), F.col("n").alias("na")
+        )
+        sb = sizes.select(
+            F.col("doc_id").alias("id_b"), F.col("n").alias("nb")
+        )
         ranked = _rarity_ranked(sh).localCheckpoint(
             eager=True, storageLevel=_SH_CKPT_LEVEL
         )
@@ -1072,18 +1094,8 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
         cand = cand2.unionByName(cand1).distinct()
         # Length filter: i ≤ min and 9i ≥ 4(na+nb) ⟹ 10·min ≥ 8·max.
         cand = (
-            cand.join(
-                sizes.select(
-                    F.col("doc_id").alias("id_a"), F.col("n").alias("na")
-                ),
-                "id_a",
-            )
-            .join(
-                sizes.select(
-                    F.col("doc_id").alias("id_b"), F.col("n").alias("nb")
-                ),
-                "id_b",
-            )
+            cand.join(sa, "id_a")
+            .join(sb, "id_b")
             .filter(
                 (10 * F.col("na") >= 8 * F.col("nb"))
                 & (10 * F.col("nb") >= 8 * F.col("na"))
@@ -1093,19 +1105,13 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
         inter = _prefix_pairs_exact(
             sh, cand, n_docs=row_count(sf_dir, "documents")
         )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
-    union_sz = F.col("na") + F.col("nb") - F.col("i")
-    # No broadcast hint on the corpus-sized per-doc size table (see
-    # q_dedup_near_jaccard) — AQE picks broadcast at test SFs only.
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(_NG_DEN * F.col("i") >= _NG_NUM * union_sz)
-        .select(
-            "id_a", "id_b",
-            F.round(F.col("i") / union_sz.cast("double"), 6).alias("jaccard"),
-        )
+        # No broadcast hint on the corpus-sized per-doc size table (see
+        # q_dedup_near_jaccard) — AQE picks broadcast at test SFs only.
+        pairs = inter.join(sa, "id_a").join(sb, "id_b")
+    return pairs.filter(
+        f"{_NG_DEN} * i >= {_NG_NUM} * (na + nb - i)"
+    ).selectExpr(
+        "id_a", "id_b", "round(i / CAST(na + nb - i AS DOUBLE), 6) AS jaccard"
     )
 
 
@@ -2061,12 +2067,12 @@ _CT_NUM, _CT_DEN = 9, 10
 )
 def q_dedup_containment(spark, sf_dir):
     d = widen(table(spark, sf_dir, "documents"))
-    sh = d.select("doc_id", F.explode(shingles("text")).alias("s"))
     if row_count(sf_dir, "documents") < _PAIR_BLOCK_MIN_DOCS:
-        # Small corpus: posting block (cutover at _PAIR_BLOCK_MIN_DOCS).
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-        inter = _posting_intersections(sh, "id_a", "id_b", symmetric=False)
+        # Small corpus: size-carrying posting lists, both orientations
+        # (cutover at _PAIR_BLOCK_MIN_DOCS).
+        pairs = _posting_pairs(d, keep="true")
     else:
+        sh = d.select("doc_id", F.explode(shingles("text")).alias("s"))
         # One materialization each for the shingle explode and the
         # rarity ranking (guide §2.4/§5.4 — see q_dedup_ngram_jaccard):
         # lazily the containment shape re-ran the corpus explode 13
@@ -2121,17 +2127,11 @@ def q_dedup_containment(spark, sf_dir):
         inter = _prefix_pairs_exact(
             sh, cand, n_docs=row_count(sf_dir, "documents")
         )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    # No broadcast hint on the corpus-sized per-doc size table (see
-    # q_dedup_near_jaccard) — AQE picks broadcast at test SFs only.
-    return (
-        inter.join(sa, "id_a")
-        .filter(_CT_DEN * F.col("i") >= _CT_NUM * F.col("na"))
-        .select(
-            "id_a", "id_b",
-            F.round(F.col("i") / F.col("na").cast("double"), 6)
-            .alias("containment"),
-        )
+        # No broadcast hint on the corpus-sized per-doc size table (see
+        # q_dedup_near_jaccard) — AQE picks broadcast at test SFs only.
+        pairs = inter.join(sa, "id_a")
+    return pairs.filter(f"{_CT_DEN} * i >= {_CT_NUM} * na").selectExpr(
+        "id_a", "id_b", "round(i / CAST(na AS DOUBLE), 6) AS containment"
     )
 
 
